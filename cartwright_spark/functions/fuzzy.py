@@ -10,12 +10,16 @@ self-contained and deterministic:
   token_sort_ratio(a, b) = ratio(" ".join(sorted(tokens)), ...)
 
 Scale note: these run only on metadata-scale inputs (column headers) and on
-small per-column sample probes against a broadcast gazetteer — never in the
-per-document hot path, which uses exact/tokenized broadcast joins instead.
+the driver over the ≤99-value column samples ``classify_columns`` collects
+(continent matching, city probes against the 24.5k-name gazetteer) — never
+in the per-document hot path, which uses exact/tokenized broadcast joins
+instead. Both fuzzy paths first drop pairs whose lengths alone cap the
+ratio at the threshold, so difflib runs only where a match is possible.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from difflib import SequenceMatcher
 
@@ -41,8 +45,14 @@ def token_sort_ratio(a: str, b: str) -> int:
 
 
 def fuzzy_match(a: str, b: str, ratio_: int = 95) -> bool:
-    """reference utils.py:10-14 — lowercased ratio strictly greater-than."""
-    return ratio(str(a).lower(), str(b).lower()) > ratio_
+    """reference utils.py:10-14 — lowercased ratio strictly greater-than.
+    difflib's match count is at most the shorter length, so pairs whose
+    lengths alone cap the ratio at ``ratio_`` skip SequenceMatcher."""
+    a, b = str(a).lower(), str(b).lower()
+    la, lb = len(a), len(b)
+    if la + lb and round(100 * (2.0 * min(la, lb) / (la + lb))) <= ratio_:
+        return False
+    return ratio(a, b) > ratio_
 
 
 def extract_one(query: str, choices, scorer=token_sort_ratio):
@@ -84,26 +94,42 @@ def _char_vec(s: str):
 
 @lru_cache(maxsize=8)
 def _probe_index(choices: tuple):
-    prepped = [_token_sort_prep(c) for c in choices]
+    """Prepped choices sorted by length, with their char-count rows."""
+    prepped = sorted((_token_sort_prep(c) for c in choices), key=len)
     mat = np.stack([_char_vec(p) for p in prepped])
     lens = np.array([len(p) for p in prepped], dtype=np.int64)
     return prepped, mat, lens, frozenset(prepped)
 
 
+def length_window(lq: int, cutoff: int) -> tuple[int, int]:
+    """Inclusive range of choice lengths lc that can score ratio > cutoff
+    against a query of length lq. The raw score 200·min(lq, lc)/(lq + lc)
+    must reach c = cutoff + 0.5 (rounded int > cutoff), which bounds lc to
+    [lq·c/(200−c), lq·(200−c)/c]; floor/ceil keep float rounding out."""
+    c = cutoff + 0.5
+    return math.floor(lq * c / (200 - c)), math.ceil(lq * (200 - c) / c)
+
+
 def any_over_cutoff(query: str, choices: tuple, cutoff: int = 90) -> bool:
     """True iff extract_one(query, choices, token_sort_ratio) scores
     strictly above `cutoff` — i.e. ∃ choice: token_sort_ratio > cutoff.
-    Exact-prep hits short-circuit; otherwise the char-count bound keeps the
-    exact difflib ratio to a handful of candidates."""
+    Exact-prep hits short-circuit; otherwise only the length window is
+    scanned, and the char-count bound keeps the exact difflib ratio to a
+    handful of candidates."""
     prepped, mat, lens, exact = _probe_index(tuple(choices))
     q = _token_sort_prep(str(query))
     if cutoff < 100 and q in exact:
         return True
+    lo, hi = length_window(len(q), cutoff)
+    a = int(np.searchsorted(lens, lo, side="left"))
+    b = int(np.searchsorted(lens, hi, side="right"))
+    if a >= b:
+        return False
     qv = _char_vec(q)
-    inter = np.minimum(mat, qv[None, :]).sum(axis=1)
-    ub = 200.0 * inter / np.maximum(lens + len(q), 1)
+    inter = np.minimum(mat[a:b], qv[None, :]).sum(axis=1)
+    ub = 200.0 * inter / np.maximum(lens[a:b] + len(q), 1)
     # rounded int ratio > cutoff requires the raw value ≥ cutoff + 0.5
     for i in np.flatnonzero(ub >= cutoff + 0.5):
-        if ratio(q, prepped[i]) > cutoff:
+        if ratio(q, prepped[a + i]) > cutoff:
             return True
     return False

@@ -2,14 +2,15 @@
 
 Reference lifecycle (categorize.py:430-443, SURVEY.md §3 E1): header
 skip-pass → all-NaN pruning → 99-value sample per column → LSTM score →
-validator cascade → header annotation → assembly. This engine expresses
-stages 2-5 as ONE DataFrame program:
+validator cascade → header annotation → assembly. Stages 2-3 are ONE Spark
+job; stages 4-5 score its ≤99 values per column on the driver:
 
-    melt (stack: columns → (column, value) rows)
-      → per-partition top-k pre-trim by seeded hash (mapInPandas; bounds the
-        shuffle to k rows per column per partition at any input size)
-      → global deterministic top-k per column (window over hash)
-      → grouped-map pandas UDF: vectorized 82-label validator bank + cascade
+    melt (stack: columns → (column, value) rows; nulls and NaNs dropped, so
+      an all-NaN column has no rows and is pruned without a count pass)
+      → deterministic top-k per column (row_number over a seeded hash;
+        planned as WindowGroupLimit Partial below the Exchange, so the
+        shuffle carries ≤k rows per column per partition)
+      → toPandas (Arrow) → 82-label validator bank + cascade per column
 
 The scan is the only full-data pass; scoring touches ≤99 values per column.
 Deliberate deterministic substitutions for reference nondeterminism
@@ -23,10 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cartwright_spark.functions.fuzzy import fuzzy_match, ratio
 from cartwright_spark.schemas import Classification
+from cartwright_spark.taxonomy.registry import LabelSpec, ordered_labels
 
 # reference utils.py:195-204 — classify-and-skip list (ordered; note the
 # reference's lng→latitude mapping bug, reproduced verbatim per SURVEY §7.3)
@@ -58,16 +59,6 @@ _BACKFILL_TIME = {"Year", "Date", "Datetime", "Timestamp", "Epoch", "Time", "Mon
 _BACKFILL_GEO = {"Geo", "Coordinates", "Location", "Address"}
 _BACKFILL_COUNTRY = {"Country", "CountryName", "CountryCode"}
 _BACKFILL_PLACE = {"State", "Town", "City", "Region", "Province", "Territory"}
-
-_SCORE_SCHEMA = T.StructType([
-    T.StructField("column", T.StringType()),
-    T.StructField("label", T.StringType()),
-    T.StructField("category", T.StringType()),
-    T.StructField("subcategory", T.StringType()),
-    T.StructField("format", T.StringType()),
-    T.StructField("parser", T.StringType()),
-    T.StructField("pass_rate", T.DoubleType()),
-])
 
 
 def read_in(spark, path: str) -> DataFrame:
@@ -123,25 +114,6 @@ def _melt(df: DataFrame, columns: list[str]) -> DataFrame:
     return stacked.where(F.col("value").isNotNull())
 
 
-def _partition_topk(k: int):
-    """mapInPandas pre-trim: keep the k hash-smallest rows per column within
-    each partition, bounding the window shuffle to k·partitions per column."""
-    def fn(batches):
-        import pandas as pd
-        acc: list = []
-        for pdf in batches:
-            acc.append(pdf)
-        if not acc:
-            return
-        all_pdf = pd.concat(acc, ignore_index=True)
-        yield (
-            all_pdf.sort_values(["column", "h", "value"])
-            .groupby("column", sort=False)
-            .head(k)
-        )
-    return fn
-
-
 def sample_columns(df: DataFrame, columns: list[str], n_samples: int = 99,
                    seed: int = 42) -> DataFrame:
     """Deterministic ≤n_samples non-null values per column as
@@ -149,42 +121,37 @@ def sample_columns(df: DataFrame, columns: list[str], n_samples: int = 99,
     melted = _melt(df, columns).withColumn(
         "h", F.xxhash64("column", "value", F.lit(seed))
     )
-    trimmed = melted.mapInPandas(_partition_topk(n_samples), melted.schema)
     w = Window.partitionBy("column").orderBy(F.col("h").asc(), F.col("value").asc())
     return (
-        trimmed.withColumn("rk", F.row_number().over(w))
+        melted.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= n_samples)
         .select("column", "value", "rk")
     )
 
 
-def _score_group(pdf):
-    """Grouped-map: run the whole validator bank over one column's sample,
-    apply threshold gate + cascade (reference categorize.py:222-244 +
-    CategoryBases.py:95-100), emit the winning classification row."""
-    import pandas as pd
-
-    from cartwright_spark.taxonomy.registry import ordered_labels
-
+def _score_group(pdf) -> LabelSpec | None:
+    """Run the whole validator bank over one column's sample, apply the
+    threshold gate + cascade (reference categorize.py:222-244 +
+    CategoryBases.py:95-100) and return the winning label, if any."""
     series = pdf.sort_values("rk")["value"].astype(str).reset_index(drop=True)
-    col_name = pdf["column"].iloc[0]
     n = len(series)
     best = None
     best_rate = -1.0
+    probed: dict = {}  # series-level probe → count (city, city_suffix share one)
     for sp in ordered_labels():
-        cnt = sp.valid_count(series)
+        if sp.series_level:
+            if sp.validate_series not in probed:
+                probed[sp.validate_series] = sp.valid_count(series)
+            cnt = probed[sp.validate_series]
+        else:
+            cnt = sp.valid_count(series)
         if cnt <= 0 or cnt < n * sp.threshold:
             continue
         rate = cnt / n
         if rate > best_rate + 1e-12:
             best, best_rate = sp, rate
         # equal rate → earlier (lower priority number) spec already kept
-    if best is None:
-        row = (col_name, None, None, None, None, None, 0.0)
-    else:
-        row = (col_name, best.label, best.category, best.subcategory,
-               best.format, best.parser, best_rate)
-    return pd.DataFrame([row], columns=[f.name for f in _SCORE_SCHEMA.fields])
+    return best
 
 
 def classify_columns(df: DataFrame, n_samples: int = 99, seed: int = 42,
@@ -196,30 +163,15 @@ def classify_columns(df: DataFrame, n_samples: int = 99, seed: int = 42,
     skip_matches = header_skip_matches(columns)
     skipped_headers = {m["header"] for m in skip_matches}
 
-    # stage 2: all-NaN pruning — one aggregate pass (categorize.py:420-428)
+    # stages 2-5: one Spark job samples every candidate column; an all-NaN
+    # column (categorize.py:420-428) has no sampled row and stays unlabelled
     candidates = [c for c in columns if c not in skipped_headers]
-    nonnull_counts = {}
+    labels: dict[str, LabelSpec | None] = {}
     if candidates:
-        aggs = []
-        dts = dict(df.dtypes)
-        for c in candidates:
-            v = F.col(f"`{c.replace('`', '``')}`")
-            if dts[c] in ("double", "float"):
-                cond = v.isNotNull() & ~F.isnan(v)
-            else:
-                cond = v.isNotNull()
-            aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(c))
-        row = df.agg(*aggs).collect()[0]
-        nonnull_counts = {c: (row[c] or 0) for c in candidates}
-    to_classify = [c for c in candidates if nonnull_counts.get(c, 0) > 0]
-
-    # stages 3-5: sample → score → cascade, one Spark job
-    value_results: dict[str, dict] = {}
-    if to_classify:
-        sampled = sample_columns(df, to_classify, n_samples=n_samples, seed=seed)
-        scored = sampled.groupBy("column").applyInPandas(_score_group, _SCORE_SCHEMA)
-        for r in scored.collect():
-            value_results[r["column"]] = r.asDict()
+        sampled = sample_columns(df, candidates, n_samples=n_samples,
+                                 seed=seed).toPandas()
+        for c, g in sampled.groupby("column", sort=False):
+            labels[c] = _score_group(g)
 
     # stage 6-7: assemble driver-side (metadata scale)
     out: list[Classification] = []
@@ -232,11 +184,11 @@ def classify_columns(df: DataFrame, n_samples: int = 99, seed: int = 42,
                     sub = m["value"]
             cl = Classification(column=c, category="geo", subcategory=sub,
                                 match_type=["fuzzy"])
-        elif c in value_results and value_results[c]["label"] is not None:
-            r = value_results[c]
+        elif labels.get(c) is not None:
+            sp = labels[c]
             cl = Classification(
-                column=c, category=r["category"], subcategory=r["subcategory"],
-                format=r["format"], parser=r["parser"], match_type=["LSTM"],
+                column=c, category=sp.category, subcategory=sp.subcategory,
+                format=sp.format, parser=sp.parser, match_type=["LSTM"],
             )
         else:
             cl = Classification(column=c)

@@ -2,8 +2,8 @@
 
 Each primitive maps a ``pd.Series`` of strings to a boolean numpy array (one
 flag per value) or, for series-level gazetteer probes, to a single count.
-They run inside Arrow-batched pandas UDFs / grouped-map UDFs — never as
-row-at-a-time Python in the Spark plan (input_hint: "no per-row Python").
+They score the ≤99-value column samples that ``classify_columns`` collects
+to the driver — never row-at-a-time Python in the Spark plan.
 
 Semantics mirror the reference validators exactly (cited per function);
 where the reference is nondeterministic (random gazetteer probes,
@@ -13,17 +13,13 @@ in SURVEY.md §7.5(5).
 
 from __future__ import annotations
 
+import _strptime
 import datetime
 
 import numpy as np
 import pandas as pd
 
-from cartwright_spark.functions.fuzzy import (
-    any_over_cutoff,
-    extract_one,
-    fuzzy_match,
-    token_sort_ratio,
-)
+from cartwright_spark.functions.fuzzy import any_over_cutoff, fuzzy_match
 from cartwright_spark.sources import gazetteers as gz
 
 # reference utils.py:157-194 — note the nonstandard 'tues','thur','sept'
@@ -46,22 +42,22 @@ def _as_str(s: pd.Series) -> pd.Series:
 def v_strptime(s: pd.Series, fmt: str) -> np.ndarray:
     """Exact ``datetime.strptime(v, fmt)`` success mask.
 
-    Fast path: ``pd.to_datetime(format=..., errors='coerce')`` (vectorized C).
-    Values the fast path rejects are re-checked with strptime so we keep
-    strptime's semantics where pandas is stricter (e.g. out-of-ns-bounds
-    years). Runs per Arrow batch.
+    strptime raises unless the regex it compiles for ``fmt`` matches the
+    whole value, so only values that pass that same regex are parsed; the
+    rest (every value of a non-date column) cost one regex match each.
     """
-    s = _as_str(s)
-    fast = pd.to_datetime(s, format=fmt, errors="coerce", exact=True)
-    ok = fast.notna().to_numpy()
-    # re-check only rejected values (rare) against the reference semantics
-    for i in np.flatnonzero(~ok):
+    rx = _strptime._TimeRE_cache.compile(fmt)
+    out = np.zeros(len(s), dtype=bool)
+    for i, v in enumerate(_as_str(s)):
+        m = rx.match(v)
+        if m is None or m.end() != len(v):
+            continue
         try:
-            datetime.datetime.strptime(s.iat[i], fmt)
-            ok[i] = True
-        except (ValueError, TypeError):
+            datetime.datetime.strptime(v, fmt)
+            out[i] = True
+        except ValueError:
             pass
-    return ok
+    return out
 
 
 def v_unix_time(s: pd.Series) -> np.ndarray:

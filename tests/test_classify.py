@@ -171,13 +171,20 @@ def test_timespan_and_epoch_columns(spark, rng):
 
 
 def test_all_nan_column_pruned(spark):
-    pdf = pd.DataFrame({
-        "empty": [np.nan, np.nan, np.nan, np.nan],
-        "ok": ["2020-01-01", "2021-02-02", "2022-03-03", "2023-04-04"],
-    })
-    cls = {c.column: c for c in classify_columns(spark.createDataFrame(pdf))}
-    assert cls["empty"].category is None
+    """All-NaN doubles and all-null strings have no sampled value, so they
+    get no value label; a matching header still backfills a category."""
+    schema = "empty double, ok string, City string, Year double"
+    nan = float("nan")
+    rows = [(nan, d, None, nan) for d in
+            ("2020-01-01", "2021-02-02", "2022-03-03", "2023-04-04")]
+    cls = {c.column: c for c in
+           classify_columns(spark.createDataFrame(rows, schema))}
+    assert cls["empty"].category is None and cls["empty"].match_type == []
     assert cls["ok"].format == "%Y-%m-%d"
+    assert (cls["City"].category, cls["City"].subcategory) == ("geo", "city")
+    assert (cls["Year"].category, cls["Year"].subcategory) == ("time", "date")
+    for c in ("City", "Year"):
+        assert cls[c].format is None and cls[c].match_type == ["fuzzy"]
 
 
 def test_columns_categorized_shape(spark, rng):

@@ -47,6 +47,21 @@ def test_any_over_cutoff_matches_extract_one():
         assert any_over_cutoff(p, names, cutoff=90) == naive, p
 
 
+def test_length_window_keeps_every_possible_match():
+    """Every (query, choice) length pair whose length bound allows a
+    ratio above the cutoff lies inside any_over_cutoff's length window."""
+    from cartwright_spark.functions.fuzzy import length_window
+    for cutoff in (85, 90, 95):
+        for lq in range(0, 120):
+            lo, hi = length_window(lq, cutoff)
+            for lc in range(0, 160):
+                if lq + lc == 0:
+                    continue
+                best = round(100 * (2.0 * min(lq, lc) / (lq + lc)))
+                if best > cutoff:
+                    assert lo <= lc <= hi, (cutoff, lq, lc, lo, hi)
+
+
 def test_probe_gazetteer_city_column():
     """A column of real city names passes the series probe; random strings
     do not (the 24k synthetic dim must not absorb junk)."""

@@ -118,6 +118,21 @@ def test_classify_sampling_prunes_columns(spark):
     s = sample_columns(df, ["o_orderstatus"], n_samples=9)
     plan = _formatted(s)
     assert "o_totalprice" not in plan.split("ReadSchema")[-1]
+    # the top-k runs in the JVM: a partial per-column limit trims each
+    # partition before the shuffle, and no Python stage is left
+    phys = _physical(s)
+    above, below = phys.split("Exchange hashpartitioning", 1)
+    assert any("WindowGroupLimit" in ln and ln.endswith("Partial")
+               for ln in below.splitlines())
+    assert "WindowGroupLimit" in above
+    for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
+        assert node not in phys, node
+    cols = ["o_orderstatus", "o_orderpriority", "o_totalprice"]
+
+    def rows(d):
+        return sorted(map(tuple, sample_columns(d, cols).toPandas()
+                          .values.tolist()))
+    assert rows(df) == rows(df.repartition(7))
 
 
 def test_date_scan_is_single_pass_codegen(spark):
