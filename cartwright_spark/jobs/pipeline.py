@@ -32,9 +32,6 @@ def main() -> None:
                     help="pages/extracted hive-partition granularity: "
                          "'day' for production crawl spans, coarser for "
                          "the decades-wide synthetic corpus")
-    ap.add_argument("--s2-part-level", type=int, default=2,
-                    help="cells partition prefix level (2 at bench "
-                         "scale, 4 at 100TB)")
     args = ap.parse_args()
 
     from cartwright_spark.plans.pipeline import run_pipeline
@@ -44,8 +41,7 @@ def main() -> None:
     summary = run_pipeline(spark, args.workdir, n_pages=args.rows,
                            s2_level=args.s2_level, zoom=args.zoom,
                            force=args.force,
-                           time_partition=args.time_partition,
-                           s2_part_level=args.s2_part_level)
+                           time_partition=args.time_partition)
     print(json.dumps(summary))
 
 

@@ -79,7 +79,7 @@ def _stage(catalog: Catalog, table: str, stage_key: str, parent,
 def run_pipeline(spark: SparkSession, workdir: str, n_pages: int = 2000,
                  s2_level: int = 10, h3_res: int = 6, zoom: int = 8,
                  force: bool = False, time_partition: str = "year",
-                 s2_part_level: int = 2, inject_fail: str | None = None,
+                 inject_fail: str | None = None,
                  fail_after_parts: int = 8) -> dict:
     cat = Catalog(workdir)
     summary: dict = {"stages": {}}
@@ -156,7 +156,6 @@ def run_pipeline(spark: SparkSession, workdir: str, n_pages: int = 2000,
         det = cat.load_table(spark, "detections", det_snap["snapshot_id"]) \
             .where(F.col("lat").isNotNull()) \
             .select("url", "kind", "lat", "lon")
-        from cartwright_spark.spatial.udfs import s2_parent_col
         return (
             det.withColumn("__c", both_cells(F.col("lat"), F.col("lon")))
             .withColumn("s2_cell", F.col("__c.s2_cell"))
@@ -165,21 +164,18 @@ def run_pipeline(spark: SparkSession, workdir: str, n_pages: int = 2000,
             .withColumn("tile_x", tile_x_col(F.col("lon"), zoom))
             .withColumn("tile_y", tile_y_col(F.col("lat"), zoom))
             .withColumn("tile_id", tile_id_col(F.col("lat"), F.col("lon"), zoom))
-            # coarse spatial partition prefix (parent cell, pure bit
-            # math on the already-encoded cell): a bbox-bounded read of
-            # the cells table prunes to the touched coarse directories.
-            # Level 2 (≤96 cells globally) at bench scale; at 100 TB
-            # raise to level 4 (≤1536 dirs, each still tens of GB) —
-            # measured here, level 4 over a globally-spread bench corpus
-            # is 1394 tiny dirs and 5.9 s of pure file overhead.
-            .withColumn("s2_part",
-                        s2_parent_col(F.col("s2_cell"), s2_part_level))
+            # one file per encode task, sorted on the cell id (S2's
+            # Hilbert order), so each file's s2_cell min/max in the
+            # manifest bounds a compact stretch of the curve. No shuffle,
+            # and no directory per coarse cell: listing those cost every
+            # full scan a partition-discovery job
+            .sortWithinPartitions("s2_cell")
         )
     cell_snap, reused = _stage(
         cat, "cells",
-        f"cells:v5:s2={s2_level}:h3={h3_res}:z={zoom}:sp={s2_part_level}"
+        f"cells:v6:s2={s2_level}:h3={h3_res}:z={zoom}"
         f":parent={det_snap['snapshot_id']}",
-        det_snap, build_cells, partition_by=["s2_part"],
+        det_snap, build_cells,
         inject_fail=inject_fail, fail_after_parts=fail_after_parts)
     summary["stages"]["cells"] = {"rows": cell_snap["row_count"], "reused": reused}
 
@@ -219,23 +215,17 @@ def run_pipeline(spark: SparkSession, workdir: str, n_pages: int = 2000,
         cell_deg = 360.0 / (1 << zoom)
         # METADATA guard, zero extra jobs: the rollup has ≤4^zoom rows
         # no matter the corpus size, so coarse zooms take the driver
-        # path — ONE distributed agg job (the collect), the exact
-        # driver Gi* mirror, and a single tiny write — instead of a
-        # checkpoint round-trip + 3 grid-bounded shuffles. Fine zooms
-        # (4^zoom > 300k) keep the fully distributed plan.
+        # path — ONE distributed agg job (Arrow toPandas), the numpy Gi*
+        # kernel, and a single tiny write — instead of a checkpoint
+        # round-trip + 3 grid-bounded shuffles. Fine zooms (4^zoom >
+        # 300k) keep the fully distributed plan.
         if (1 << (2 * zoom)) <= 300_000:
-            from cartwright_spark.spatial.autocorr import _gistar_driver
-            rows = rollup.collect()
-            gi_rows = _gistar_driver(
-                [{"cell_row": r["tile_y"], "cell_col": r["tile_x"],
-                  "x": r["n_points"]} for r in rows], cell_deg)
-            gi = {(r[0], r[1]): r[5] for r in gi_rows}
-            data = [(r["tile_id"], r["n_points"], r["lat_min"],
-                     r["lat_max"], r["lon_min"], r["lon_max"],
-                     r["tile_x"], r["tile_y"],
-                     gi[(r["tile_y"], r["tile_x"])]) for r in rows]
+            from cartwright_spark.spatial.autocorr import gistar_numpy
+            pdf = rollup.toPandas()
+            _, _, pdf["gi_star"] = gistar_numpy(
+                pdf["tile_y"], pdf["tile_x"], pdf["n_points"], cell_deg)
             # ≤4^zoom rows: a handful of writer tasks, not one per core
-            return spark.createDataFrame(data, _TILE_SCHEMA).coalesce(4)
+            return spark.createDataFrame(pdf, _TILE_SCHEMA).coalesce(4)
         from cartwright_spark.spatial.autocorr import gistar_from_cells
         rollup = rollup.localCheckpoint(eager=True)
         gi = gistar_from_cells(

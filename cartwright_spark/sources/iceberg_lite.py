@@ -32,6 +32,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _json_safe(v):
@@ -313,24 +314,28 @@ class Catalog:
                    snapshot_id: int | None = None,
                    partition_filter=None,
                    as_of_ts: float | None = None) -> DataFrame:
-        """Read a committed snapshot. Hive partition discovery is automatic
-        (partition columns come back typed; ``.where`` on them prunes in
-        Catalyst). With ``partition_filter`` the file list itself is cut
-        down from the manifest first — basePath keeps the partition
-        columns in the schema. Time travel: ``snapshot_id`` pins an exact
-        snapshot; ``as_of_ts`` resolves the newest snapshot committed at
-        or before that unix time (Iceberg's FOR TIMESTAMP AS OF)."""
+        """Read a committed snapshot from its manifest: the files it lists
+        (cut down first by ``partition_filter`` when given) under the
+        schema it records, so no footer schema-inference job runs. Hive
+        partition columns are left out of that schema and discovered from
+        the file paths (basePath), so they come back typed as a directory
+        read types them and ``.where`` on them prunes in Catalyst. Time
+        travel: ``snapshot_id`` pins an exact snapshot; ``as_of_ts``
+        resolves the newest snapshot committed at or before that unix
+        time (Iceberg's FOR TIMESTAMP AS OF)."""
         snap = self._snap(name, snapshot_id, as_of_ts=as_of_ts)
         data_dir = os.path.join(self.root, snap["data_dir"])
-        if partition_filter is None:
-            return spark.read.parquet(data_dir)
-        files = self.select_files(name, snap["snapshot_id"],
-                                  partition_filter=partition_filter)
-        if not files:
-            # empty selection: preserve schema via a 0-row read of the dir
-            return spark.read.parquet(data_dir).limit(0)
-        return spark.read.option("basePath", data_dir).parquet(
-            *[os.path.join(self.root, f["path"]) for f in files])
+        schema = StructType([
+            f for f in StructType.fromJson(json.loads(snap["schema"]))
+            if f.name not in snap["partition_by"]])
+        files = snap["files"] if partition_filter is None else \
+            self.select_files(name, snap["snapshot_id"],
+                              partition_filter=partition_filter)
+        # empty selection: a 0-row read of every file keeps the schema
+        df = spark.read.schema(schema).option("basePath", data_dir).parquet(
+            *[os.path.join(self.root, f["path"])
+              for f in files or snap["files"]])
+        return df if files else df.limit(0)
 
     def lineage(self, name: str) -> list[dict]:
         """Manifest chain newest→oldest following parent pointers."""

@@ -226,28 +226,12 @@ def getis_ord_gistar(points: DataFrame, lat_col: str = "lat",
         cell_counts(points, lat_col, lon_col, cell_deg), cell_deg)
 
 
-def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0,
-                      driver_threshold: int | None = None) -> DataFrame:
+def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0) -> DataFrame:
     """Gi* from an existing (cell_row, cell_col, x) rollup — the
     incremental-maintenance entry point: per-batch cell counts are
     algebraically mergeable (sum by cell), and everything downstream of
-    the counts is grid-bounded recomputation.
-
-    driver_threshold: when set and count(cells) <= threshold, compute
-    the statistic on the driver (`_gistar_driver`) instead of the
-    3-shuffle distributed plan — the grid_cluster counted-guard
-    precedent. The rollup is grid-bounded, so callers that already
-    materialized it (the pipeline's tile stage) pay one cheap count and
-    save ~1 s of tiny-shuffle job latency per run; results are
-    bit-identical (tests/test_pipeline.py, test_autocorr.py). Callers
-    at fine grids (4^15 cells) leave it None and keep the distributed
-    plan — nothing here is ever proportional to the corpus."""
-    if driver_threshold is not None and cells.count() <= driver_threshold:
-        rows = cells.select("cell_row", "cell_col", "x").collect()
-        out = _gistar_driver(rows, cell_deg)
-        return cells.sparkSession.createDataFrame(
-            out, "cell_row bigint, cell_col bigint, x bigint, "
-                 "deg bigint, s bigint, gi_star double")
+    the counts is grid-bounded recomputation. `gistar_numpy` is the
+    driver form for rollups already on the driver."""
     per_cell = neighbour_stats(cells, cell_deg)
     stats = per_cell.agg(
         F.count(F.lit(1)).alias("n_cells"),
@@ -258,45 +242,48 @@ def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0,
                     F.expr(gistar_sql()).alias("gi_star")))
 
 
-def _gistar_driver(rows, cell_deg: float) -> list[tuple]:
-    """Driver mirror of neighbour_stats + gistar_sql for counted-guard
-    grids. Every aggregate is an exact Python int (arbitrary precision,
-    so it can only be MORE exact than the distributed BIGINT path —
-    identical below 2^63), and the final float expression replays
-    gistar_sql() operation-for-operation in IEEE doubles, so the result
-    is bit-identical to the distributed plan."""
+def gistar_numpy(cell_row, cell_col, x, cell_deg: float):
+    """neighbour_stats + gistar_sql over numpy arrays of distinct
+    occupied cells -> (deg, s, gi_star). Neighbours are found by
+    binary search over the sorted cell keys; every aggregate is an
+    exact int64 sum and the float expression replays gistar_sql()
+    operation for operation in IEEE doubles, so the result is
+    bit-identical to `gistar_from_cells`. gi_star is a nullable
+    pandas Float64 array: NULL where the SQL form is NULL (n = 1 or a
+    zero denominator), never NaN."""
+    import numpy as np
+    import pandas as pd
     ncols = int(round(360.0 / float(cell_deg)))
-    occ = {(r["cell_row"], r["cell_col"]): r["x"] for r in rows}
-    n_cells = len(occ)
-    sx = 0
-    sxx = 0
-    for x in occ.values():
-        sx += x
-        sxx += x * x
-    n_d = float(n_cells)
-    xbar = float(sx) / n_d
-    s2 = max(float(sxx) / n_d - xbar * xbar, 0.0)
-    import math
-    sqrt_s2 = math.sqrt(s2)
-    out = []
-    for (r, c), x in occ.items():
-        deg = 0
-        s = 0
-        for dr, dc in _OFFS:
-            nx = occ.get((r + dr, (c + dc) % ncols))
-            if nx is not None:
-                deg += 1
-                s += nx
-        if n_cells - 1 == 0:
-            gi = None
-        else:
-            wi = float(deg + 1)
-            num = float(s + x) - xbar * wi
-            den = sqrt_s2 * math.sqrt(
-                (n_d * wi - wi * wi) / float(n_cells - 1))
-            gi = None if den == 0.0 else num / den
-        out.append((int(r), int(c), int(x), deg, s, gi))
-    return out
+    row = np.asarray(cell_row, np.int64)
+    col = np.asarray(cell_col, np.int64)
+    x = np.asarray(x, np.int64)
+    # one int64 key per (row, col): the column span covers the occupied
+    # columns and the wrapped neighbour columns [0, ncols)
+    c0 = min(int(col.min(initial=0)), 0)
+    span = max(int(col.max(initial=0)), ncols - 1) - c0 + 1
+    keys = row * span + (col - c0)
+    order = np.argsort(keys)
+    skeys, sorted_x = keys[order], x[order]
+    deg = np.zeros(len(x), np.int64)
+    s = np.zeros(len(x), np.int64)
+    for dr, dc in _OFFS:
+        probe = (row + dr) * span + (col + dc) % ncols - c0
+        i = np.minimum(np.searchsorted(skeys, probe), len(skeys) - 1)
+        hit = skeys[i] == probe
+        deg += hit
+        s += np.where(hit, sorted_x[i], 0)
+    n_cells = len(x)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        n_d = np.float64(n_cells)
+        xbar = np.float64(x.sum()) / n_d
+        s2 = max(np.float64((x * x).sum()) / n_d - xbar * xbar, 0.0)
+        wi = (deg + 1).astype(np.float64)
+        num = (s + x).astype(np.float64) - xbar * wi
+        den = np.sqrt(s2) * np.sqrt(
+            (n_d * wi - wi * wi) / np.float64(n_cells - 1))
+        gi = num / den
+    null = (den == 0.0) | (n_cells == 1)
+    return deg, s, pd.arrays.FloatingArray(np.where(null, 0.0, gi), null)
 
 
 def ripley_k(points: DataFrame, lat_col: str = "lat",

@@ -149,6 +149,62 @@ def test_gistar_hotspot_band_scores_high(spark):
     assert out["gi_star"].max() == hot["gi_star"].max()
 
 
+def _gistar_grids():
+    """(cell_deg, [(row, col, x)]) cases for the numpy/SQL Gi*
+    differential: seeded random grids with both wrap columns (0 and
+    ncols-1) occupied side by side, a fully occupied 4-column grid, one
+    cell (n = 1: NULL) and a constant surface (S = 0: NULL)."""
+    rng = np.random.default_rng(11)
+    cases = []
+    for cell_deg, n_cells, rows in ((5.0, 150, 36), (360.0 / 256, 400, 30),
+                                    (30.0, 40, 6), (5.0, 60, 3)):
+        ncols = int(round(360.0 / cell_deg))
+        cells = {(int(r), int(c)): int(x) for r, c, x in zip(
+            rng.integers(0, rows, n_cells), rng.integers(0, ncols, n_cells),
+            rng.integers(1, 10**6, n_cells))}
+        for r in range(2):
+            cells[(r, 0)] = int(rng.integers(1, 50))
+            cells[(r, ncols - 1)] = int(rng.integers(1, 50))
+        cases.append((cell_deg, [(r, c, x) for (r, c), x in cells.items()]))
+    cases.append((90.0, [(r, c, int(x)) for r in range(2) for c, x in
+                         zip(range(4), rng.integers(1, 9, 4))]))
+    cases.append((5.0, [(3, 7, 5)]))
+    cases.append((10.0, [(r, c, 7) for r in range(4) for c in range(0, 36, 5)]))
+    return cases
+
+
+def test_gistar_numpy_bit_identical_to_sql(spark):
+    """The driver kernel gistar_numpy gives the distributed
+    gistar_from_cells plan's deg, s and gi_star bit for bit, and NULL
+    (not NaN) exactly where the plan is NULL."""
+    import pandas as pd
+
+    from cartwright_spark.spatial.autocorr import (gistar_from_cells,
+                                                   gistar_numpy)
+
+    for cell_deg, cells in _gistar_grids():
+        want = gistar_from_cells(spark.createDataFrame(
+            cells, "cell_row bigint, cell_col bigint, x bigint"),
+            cell_deg=cell_deg).collect()
+        row, col, x = (np.array(v, np.int64) for v in zip(*cells))
+        deg, s, gi = gistar_numpy(row, col, x, cell_deg)
+        assert isinstance(gi.dtype, pd.Float64Dtype)
+        got = {(int(r), int(c)): (int(d), int(t), None if g is pd.NA else g)
+               for r, c, d, t, g in zip(row, col, deg, s, gi)}
+        assert len(want) == len(got)
+        for w in want:
+            d, t, g = got[(w["cell_row"], w["cell_col"])]
+            assert (d, t) == (w["deg"], w["s"])
+            if w["gi_star"] is None:
+                assert g is None
+            else:
+                assert g is not None and np.float64(g).tobytes() == \
+                    np.float64(w["gi_star"]).tobytes()
+    # one cell and a constant surface are NULL, not only equal to SQL
+    assert gistar_numpy([3], [7], [5], 5.0)[2].isna().all()
+    assert gistar_numpy([0, 0, 1], [0, 35, 0], [7, 7, 7], 10.0)[2].isna().all()
+
+
 # ---------------------------------------------------------------------------
 # KDE heatmap (spatial/kde.py)
 # ---------------------------------------------------------------------------

@@ -171,6 +171,33 @@ def test_mid_stage_failure_injection_resume(spark, tmp_path):
     assert got == want
 
 
+def test_cells_layout_sorted_files_with_bounds(spark, tmp_path):
+    """The cells snapshot is unpartitioned: at most one file per encode
+    task, each sorted on s2_cell, with the s2_cell min/max in the
+    manifest that a spatial read prunes files by."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    wd = str(tmp_path / "layout")
+    run_pipeline(spark, wd, n_pages=400)
+    cat = Catalog(wd)
+    snap = cat.latest_snapshot("cells")
+    assert snap["partition_by"] == []
+    assert "s2_part" not in cat.load_table(spark, "cells").columns
+    for _, dirs, _ in os.walk(os.path.join(wd, snap["data_dir"])):
+        assert not dirs                       # no k=v directories
+    encode_tasks = cat.load_table(
+        spark, "detections", snap["parent_snapshot"]).rdd.getNumPartitions()
+    assert 1 <= len(snap["files"]) <= encode_tasks
+    for f in snap["files"]:
+        cells = pq.read_table(os.path.join(wd, f["path"]),
+                              columns=["s2_cell"])["s2_cell"].to_numpy()
+        assert (cells[1:] >= cells[:-1]).all()
+        assert (f["stats"]["s2_cell"]["min"], f["stats"]["s2_cell"]["max"]) \
+            == (cells.min(), cells.max())
+
+
 def test_time_travel_and_expiry(spark, tmp_path):
     """Snapshot time travel (by id and by timestamp) + expire_snapshots:
     each commit owns its own data dir, so old versions stay readable
@@ -353,3 +380,20 @@ def test_hotspot_stage_matches_direct_gistar(spark, tmp_path):
     # the 3 planted hot boxes must dominate the z-scores
     top = sorted(stored, key=lambda r: -(r["gi_star"] or -9e9))[:3]
     assert all((r["gi_star"] or 0) > 1.96 for r in top)
+
+
+def test_tiles_gi_star_null_is_null(spark, tmp_path):
+    """Where Gi* is undefined the committed gi_star is NULL, not NaN: at
+    zoom 0 every point falls in the one tile (n = 1)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    wd = str(tmp_path / "zoom0")
+    run_pipeline(spark, wd, n_pages=100, zoom=0)
+    snap = Catalog(wd).latest_snapshot("tile_counts")
+    gi = pq.ParquetDataset([os.path.join(wd, f["path"])
+                            for f in snap["files"]]).read()["gi_star"]
+    assert len(gi) == 1 and gi.null_count == 1
+    assert Catalog(wd).load_table(spark, "tile_counts").first()["gi_star"] \
+        is None
