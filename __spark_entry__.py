@@ -2162,18 +2162,18 @@ def q_fuzzy_country_join(spark, sf_dir):
 
 def q_temporal_resolution(spark, sf_dir):
     """A6-A8: per-user temporal resolution (median delta → unit match →
-    uniformity), pure-JVM distributed form (resolution.py
-    temporal_resolution_grouped_sql — field-identical to the
-    applyInPandas/numpy kernel, parity-asserted in tests). Full DuckDB
-    oracle: the unit-table argmin, median, and uniformity thresholds are
-    all re-derived in SQL (units as a VALUES table, rank by relative
-    error with insertion-order tie-break)."""
+    uniformity) as one JVM aggregate (resolution.py
+    temporal_resolution_grouped — equal to the numpy kernel per group,
+    parity-asserted in tests). Full DuckDB oracle: the unit-table argmin,
+    median, and uniformity thresholds are all re-derived in SQL (units as
+    a VALUES table, rank by relative error with insertion-order
+    tie-break)."""
     from cartwright_spark.operators.resolution import (
-        temporal_resolution_grouped_sql,
+        temporal_resolution_grouped,
     )
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"))
-    return temporal_resolution_grouped_sql(ev, "ts", "user_id") \
+    return temporal_resolution_grouped(ev, "ts", "user_id") \
         .select("group", "uniformity", "unit")
 
 

@@ -14,7 +14,7 @@ Layout (SURVEY.md §7.1):
   taxonomy/      82-label registry + vectorized validator bank
   operators/     classify, resolution, extract, dedup, simsearch, textstats
   spatial/       s2, h3, pip, knn, tiles, skew (all from scratch)
-  plans/         end-to-end pipeline builder + per-stage metrics
+  plans/         end-to-end crawl pipeline (snapshot-checkpointed stages)
 """
 
 __version__ = "0.1.0"

@@ -1,21 +1,22 @@
 """Temporal + spatial resolution detection (reference analysis/ package).
 
-Two execution shapes, both Spark-first:
+One Spark form per analysis, each one result row per group:
 
-* ``*_grouped`` — one result row per group via ``applyInPandas``: the
-  reference-equivalent numpy routine (grid detection via row/column
-  adjacency replacing scipy's Delaunay, space_resolution.py:29-107 —
-  see detect_latlon_resolution_np) runs per group inside an Arrow batch.
-  This is
-  the 100 TB shape: thousands of datasets/columns analyzed in parallel, one
-  group each.
-* ``temporal_deltas`` — fully distributed window-lag deltas for one huge
-  series (dropDuplicates → lag over orderBy; partition by group key when
-  available to avoid a single-partition sort).
+* ``temporal_resolution_grouped`` — a JVM aggregate: one
+  ``groupBy(group)`` collecting each group's distinct epoch seconds, then
+  array expressions on the group's row (sorted deltas, median, uniformity,
+  unit argmin). One Exchange, no window, no join, no Python stage, so it
+  scales with the group count without paying a Python-worker boundary per
+  group.
+* ``spatial_resolution_grouped`` — ``applyInPandas``: the
+  reference-equivalent numpy grid detection (row/column adjacency
+  replacing scipy's Delaunay, space_resolution.py:29-107 — see
+  detect_latlon_resolution_np) runs per group inside an Arrow batch.
 
 The numpy kernels (`detect_temporal_resolution_np`,
 `detect_latlon_resolution_np`) mirror the reference exactly:
-analysis/helpers.py:7-25, time_resolution.py:8-66, space_resolution.py:9-107.
+analysis/helpers.py:7-25, time_resolution.py:8-66, space_resolution.py:9-107,
+and are the references the Spark forms are tested against.
 """
 
 from __future__ import annotations
@@ -24,9 +25,8 @@ from datetime import datetime, timezone
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cartwright_spark.schemas import (
     ANGLE_UNITS,
@@ -159,7 +159,6 @@ def detect_latlon_resolution_np(lat, lon) -> GeoSpatialResolution | None:
 # Spark operators
 # ---------------------------------------------------------------------------
 
-_TEMPORAL_SCHEMA = "group string, uniformity string, unit string, resolution double, error double"
 _SPATIAL_SCHEMA = (
     "group string, kind string, uniformity string, unit string, "
     "resolution double, error double"
@@ -168,24 +167,47 @@ _SPATIAL_SCHEMA = (
 
 def temporal_resolution_grouped(df: DataFrame, ts_col: str,
                                 group_col: str | None = None) -> DataFrame:
-    """One Resolution row per group. ts_col: timestamp or numeric seconds."""
+    """One Resolution row per group (``detect_temporal_resolution_np`` per
+    group; groups with < 2 distinct timestamps are absent). ts_col:
+    timestamp or numeric seconds."""
     src = df.select(
         (F.col(group_col) if group_col else F.lit("_all")).cast("string").alias("group"),
         # timestamp→double keeps fractional seconds (unix_timestamp would not)
         F.col(ts_col).cast("double").alias("secs"),
     ).where(F.col("secs").isNotNull())
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = detect_temporal_resolution_np(pdf["secs"].to_numpy())
-        if res is None:
-            return pd.DataFrame(
-                [], columns=["group", "uniformity", "unit", "resolution", "error"])
-        return pd.DataFrame([{
-            "group": pdf["group"].iloc[0], "uniformity": res.uniformity,
-            "unit": res.unit, "resolution": res.resolution, "error": res.error,
-        }])
-
-    return src.groupBy("group").applyInPandas(fn, _TEMPORAL_SCHEMA)
+    t = F.col("t")  # the group's sorted distinct seconds
+    # n deltas: slice both sides to n, as zip_with pads the shorter with NULL
+    n = F.size(t) - 1
+    d = F.sort_array(F.zip_with(F.slice(t, 2, n), F.slice(t, 1, n),
+                                lambda a, b: a - b))
+    # np.median: mean of the two middle values (one value when n is odd)
+    med = F.expr("(d[(size(d) - 1) div 2] + d[size(d) div 2]) / 2")
+    maxdev = F.array_max(F.transform("d", lambda x: F.abs(x - F.col("med"))))
+    absdev_mean = F.aggregate(
+        "d", F.lit(0.0), lambda acc, x: acc + F.abs(x - F.col("med"))) / F.size("d")
+    uniformity = (
+        F.when(F.col("maxdev") < 1e-9 * F.abs("med"), Uniformity.PERFECT.value)
+        .when(F.col("maxdev") < 0.01 * F.abs("med"), Uniformity.UNIFORM.value)
+        .otherwise(Uniformity.NOT_UNIFORM.value))
+    # match_unit: array_position finds np.argmin's first minimum
+    durs = [F.lit(float(v)) for v in TIME_UNITS.values()]
+    errs = F.array(*[F.abs(dur - F.col("med")) / dur for dur in durs])
+    k = F.col("k")
+    dur = F.element_at(F.array(*durs), k)
+    return (src.groupBy("group")
+            .agg(F.sort_array(F.collect_set("secs")).alias("t"))
+            .where(F.size("t") >= 2)
+            .select("group", d.alias("d"))
+            .select("group", "d", med.alias("med"))
+            .select("group", "med", maxdev.alias("maxdev"),
+                    absdev_mean.alias("absdev_mean"),
+                    F.array_position(errs, F.array_min(errs)).cast("int")
+                    .alias("k"))
+            .select("group", uniformity.alias("uniformity"),
+                    F.element_at(F.array(*map(F.lit, TIME_UNITS)), k)
+                    .alias("unit"),
+                    (F.col("med") / dur).alias("resolution"),
+                    (F.col("absdev_mean") / dur).alias("error")))
 
 
 def spatial_resolution_grouped(df: DataFrame, lat_col: str, lon_col: str,
@@ -212,193 +234,3 @@ def spatial_resolution_grouped(df: DataFrame, lat_col: str, lon_col: str,
         return pd.DataFrame(rows, columns=cols)
 
     return src.groupBy("group").applyInPandas(fn, _SPATIAL_SCHEMA)
-
-
-def temporal_resolution_grouped_sql(df: DataFrame, ts_col: str,
-                                    group_col: str | None = None) -> DataFrame:
-    """A6-A8 per-group temporal resolution as PURE JVM expressions — the
-    100 TB form of `temporal_resolution_grouped` (same semantics, asserted
-    equal in tests): distinct epoch seconds → lag deltas → exact median
-    (F.median) → uniformity thresholds → unit argmin via a broadcast join
-    against the 11-row unit table + rank. No Python stage: the
-    applyInPandas form pays an Arrow boundary and per-group python-worker
-    dispatch (measured 3.5 s vs ~0.8 s at sf0.1, 150 groups × 100k rows);
-    this one is window + aggregate + broadcast-join codegen end to end.
-
-    Returns (group, uniformity, unit, resolution, error) like the grouped
-    form (groups with <2 distinct timestamps are absent)."""
-    spark = df.sparkSession
-    src = df.select(
-        (F.col(group_col) if group_col else F.lit("_all"))
-        .cast("string").alias("group"),
-        F.col(ts_col).cast("double").alias("secs"),
-    ).where(F.col("secs").isNotNull()).dropDuplicates(["group", "secs"])
-
-    w = Window.partitionBy("group").orderBy("secs")
-    d = (src.withColumn("delta", F.col("secs") - F.lag("secs").over(w))
-         .where(F.col("delta").isNotNull()))
-    med = d.groupBy("group").agg(F.median("delta").alias("med"))
-    stats = (d.join(med, "group")
-             .groupBy("group")
-             .agg(F.first("med").alias("med"),
-                  F.max(F.abs(F.col("delta") - F.col("med"))).alias("maxdev"),
-                  F.avg(F.abs(F.col("delta") - F.col("med"))).alias("meandev")))
-    uniformity = (
-        F.when(F.col("maxdev") < 1e-9 * F.abs("med"),
-               Uniformity.PERFECT.value)
-        .when(F.col("maxdev") < 0.01 * F.abs("med"), Uniformity.UNIFORM.value)
-        .otherwise(Uniformity.NOT_UNIFORM.value))
-    units = F.broadcast(spark.createDataFrame(
-        [(n, float(v), i) for i, (n, v) in enumerate(TIME_UNITS.items())],
-        "unit string, dur double, idx int"))
-    ranked = (stats.withColumn("uniformity", uniformity)
-              .crossJoin(units)
-              .withColumn("__rn", F.row_number().over(
-                  Window.partitionBy("group").orderBy(
-                      (F.abs(F.col("dur") - F.col("med")) / F.col("dur")).asc(),
-                      F.col("idx").asc()))))
-    return (ranked.where(F.col("__rn") == 1)
-            .select("group", "uniformity", "unit",
-                    (F.col("med") / F.col("dur")).alias("resolution"),
-                    (F.col("meandev") / F.col("dur")).alias("error")))
-
-
-def spatial_resolution_grouped_sql(df: DataFrame, lat_col: str, lon_col: str,
-                                   group_col: str | None = None,
-                                   tol: float = 1e-6) -> DataFrame:
-    """A9 grid detection as PURE JVM expressions — the distributable form
-    the `detect_latlon_resolution_np` docstring promises (groupBy bin +
-    window lag), semantics field-identical to the numpy kernel (parity
-    test): unique radian points → axis-adjacent diffs within rows/columns
-    quantized at `tol` (np.rint ≡ F.rint, half-even) → edge-count
-    acceptance (n_h + n_v ≥ n_points, both axes non-empty) → exact medians
-    → square-vs-rect branch with the reference's uniformity thresholds,
-    unit argmin, and (quirk preserved) the rect branch's dimensionless
-    rad2deg(|1 − d/avg|) error."""
-    spark = df.sparkSession
-    src = (df.select(
-        (F.col(group_col) if group_col else F.lit("_all"))
-        .cast("string").alias("group"),
-        F.radians(F.col(lat_col).cast("double")).alias("la"),
-        F.radians(F.col(lon_col).cast("double")).alias("lo"))
-        .dropna().dropDuplicates(["group", "la", "lo"]))
-    n_pts = src.groupBy("group").agg(F.count("*").alias("n_points"))
-
-    binned = (src.withColumn("latbin", F.rint(F.col("la") / tol).cast("long"))
-              .withColumn("lonbin", F.rint(F.col("lo") / tol).cast("long")))
-    wlon = Window.partitionBy("group", "latbin").orderBy("lo")
-    dlon = (binned.withColumn("d", F.col("lo") - F.lag("lo").over(wlon))
-            .where(F.col("d").isNotNull())
-            .select("group", F.lit("lon").alias("axis"),
-                    F.abs("d").alias("d")))
-    wlat = Window.partitionBy("group", "lonbin").orderBy("la")
-    dlat = (binned.withColumn("d", F.col("la") - F.lag("la").over(wlat))
-            .where(F.col("d").isNotNull())
-            .select("group", F.lit("lat").alias("axis"),
-                    F.abs("d").alias("d")))
-    diffs = dlon.unionByName(dlat)
-
-    med_axis = diffs.groupBy("group", "axis").agg(
-        F.median("d").alias("med_ax"), F.count("*").alias("n_ax"))
-    med_all = diffs.groupBy("group").agg(
-        F.median("d").alias("med_all"), F.count("*").alias("n_d"))
-
-    enriched = diffs.join(med_axis, ["group", "axis"]).join(med_all, "group")
-    ax_stats = enriched.groupBy("group", "axis").agg(
-        F.first("med_ax").alias("med_ax"),
-        F.max(F.abs(F.col("d") - F.col("med_ax"))).alias("mx_ax"),
-        F.avg(F.abs(F.lit(1.0) - F.col("d") / F.col("med_ax")))
-        .alias("rel_me_ax"))
-    sq_stats = enriched.groupBy("group").agg(
-        F.first("med_all").alias("med_all"), F.first("n_d").alias("n_d"),
-        F.max(F.abs(F.col("d") - F.col("med_all"))).alias("mx_all"),
-        F.avg(F.abs(F.col("d") - F.col("med_all"))).alias("me_all"))
-
-    # acceptance + square test per group
-    axp = (med_axis.groupBy("group")
-           .pivot("axis", ["lat", "lon"]).agg(F.first("med_ax")))
-    gates = (sq_stats.join(n_pts, "group").join(axp, "group")
-             .where((F.col("n_d") >= F.col("n_points"))
-                    & F.col("lat").isNotNull() & F.col("lon").isNotNull())
-             .withColumn("is_square",
-                         F.abs(F.col("lon") - F.col("lat")) < F.lit(1e-6)))
-
-    units = F.broadcast(spark.createDataFrame(
-        [(n, float(v), i) for i, (n, v) in enumerate(ANGLE_UNITS.items())],
-        "unit string, dur double, idx int"))
-
-    def _uniformity(mx, avg):
-        return (F.when(mx < 1e-9 * F.abs(avg), Uniformity.PERFECT.value)
-                .when(mx < 0.01 * F.abs(avg), Uniformity.UNIFORM.value)
-                .otherwise(Uniformity.NOT_UNIFORM.value))
-
-    def _pick_unit(dfx, avg_rad_col):
-        w = Window.partitionBy("group", "kind").orderBy(
-            (F.abs(F.col("dur") - F.degrees(F.col(avg_rad_col)))
-             / F.col("dur")).asc(), F.col("idx").asc())
-        return (dfx.crossJoin(units)
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1))
-
-    sq = (gates.where("is_square")
-          .withColumn("kind", F.lit("square"))
-          .withColumn("uniformity", _uniformity(F.col("mx_all"),
-                                                F.col("med_all"))))
-    sq = _pick_unit(sq, "med_all").select(
-        "group", "kind", "uniformity", "unit",
-        (F.degrees("med_all") / F.col("dur")).alias("resolution"),
-        (F.degrees("me_all") / F.col("dur")).alias("error"))
-
-    rect = (gates.where(~F.col("is_square")).select("group")
-            .join(ax_stats, "group")
-            .withColumn("kind", F.col("axis"))
-            .withColumn("uniformity", _uniformity(F.col("mx_ax"),
-                                                  F.col("med_ax"))))
-    rect = _pick_unit(rect, "med_ax").select(
-        "group", "kind", "uniformity", "unit",
-        (F.degrees("med_ax") / F.col("dur")).alias("resolution"),
-        # reference quirk (space_resolution.py): the rect-branch error is
-        # rad2deg of a DIMENSIONLESS mean relative deviation
-        (F.degrees("rel_me_ax") / F.col("dur")).alias("error"))
-    return sq.unionByName(rect)
-
-
-def temporal_deltas(df: DataFrame, ts_col: str,
-                    group_col: str | None = None) -> DataFrame:
-    """Distributed adjacent-delta computation (A6/W1): dropDuplicates →
-    lag window → delta seconds. Partitioned by group when provided (a
-    global orderBy window is a deliberate single-series fallback)."""
-    secs = F.col(ts_col).cast("double")  # timestamp→double keeps micros
-    keys = [group_col] if group_col else []
-    src = df.select(*keys, secs.alias("secs")).dropDuplicates([*keys, "secs"])
-    w = (Window.partitionBy(*keys) if keys else Window.partitionBy()).orderBy("secs")
-    out = src.withColumn("delta_sec", F.col("secs") - F.lag("secs").over(w))
-    return out.where(F.col("delta_sec").isNotNull())
-
-
-def temporal_resolution_distributed(df: DataFrame, ts_col: str) -> Resolution | None:
-    """Whole-series resolution via distributed aggregation: exact median of
-    deltas (F.median), then uniformity/error stats — two scans over the
-    cached deltas instead of a driver-side sort."""
-    deltas = temporal_deltas(df, ts_col).select("delta_sec").persist()
-    try:
-        n = deltas.count()
-        if n < 1:
-            return None
-        med = deltas.agg(F.median("delta_sec")).collect()[0][0]
-        stats = deltas.agg(
-            F.max(F.abs(F.col("delta_sec") - F.lit(med))).alias("max_dev"),
-            F.avg(F.abs(F.col("delta_sec") - F.lit(med))).alias("mean_dev"),
-        ).collect()[0]
-        mag = abs(med)
-        if stats["max_dev"] < 1e-9 * mag:
-            uniformity = Uniformity.PERFECT.value
-        elif stats["max_dev"] < 0.01 * mag:
-            uniformity = Uniformity.UNIFORM.value
-        else:
-            uniformity = Uniformity.NOT_UNIFORM.value
-        scale, unit = match_unit(TIME_UNITS, float(med))
-        return Resolution(uniformity, unit, float(scale),
-                          float(stats["mean_dev"] / TIME_UNITS[unit]))
-    finally:
-        deltas.unpersist()

@@ -235,7 +235,9 @@ def run_pipeline(spark: SparkSession, workdir: str, n_pages: int = 2000,
             cell_deg=cell_deg) \
             .select(F.col("cell_row").alias("tile_y"),
                     F.col("cell_col").alias("tile_x"), "gi_star")
-        return rollup.join(F.broadcast(gi), ["tile_x", "tile_y"], "left")
+        # the join puts its keys first; commit the coarse path's order
+        return (rollup.join(F.broadcast(gi), ["tile_x", "tile_y"], "left")
+                .select(*rollup.columns, "gi_star"))
     tile_snap, reused = _stage(
         cat, "tile_counts", f"tiles:v4:z={zoom}:parent={cell_snap['snapshot_id']}",
         cell_snap, build_tiles, inject_fail=inject_fail,

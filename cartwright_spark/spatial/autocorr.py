@@ -30,7 +30,7 @@ Scale shape (the 100 TB audit):
      bounded 8-way explode of the CELL table (never the points). The
      cell table is grid-bounded, so AQE broadcasts it at coarse
      resolutions; at fine resolutions it is a plain shuffle equi-join
-     with fan-out exactly 8.
+     with fan-out at most 8.
   3. one global agg to a 1-row stats frame, broadcast back.
 No driver paths, no cartesian, nothing proportional to the corpus after
 step 1.
@@ -41,8 +41,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_OFFS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-         if (dr, dc) != (0, 0)]
+
+def _neighbour_offsets(ncols: int) -> list[tuple[int, int]]:
+    """The 8-neighbour (dr, dc) offsets with dc taken modulo the column
+    count: on a grid of one or two columns several offsets wrap onto the
+    same neighbour, which must count once."""
+    return sorted({(dr, dc % ncols) for dr in (-1, 0, 1)
+                   for dc in (-1, 0, 1)} - {(0, 0)})
 
 
 def moran_global_sql() -> str:
@@ -89,10 +94,11 @@ def neighbour_stats(cells: DataFrame, cell_deg: float = 5.0,
     """(cell_row, cell_col, x) -> + (deg, s[, q]): occupied 8-neighbour
     count, neighbour-x sum, and (with ``include_sq``) neighbour-x^2 sum
     `q` (the extra moment local Geary needs), longitude-wrapped.
-    Explodes the CELL table 8x (grid-bounded), never the points."""
+    Explodes the CELL table at most 8x (grid-bounded), never the points."""
     ncols = int(round(360.0 / float(cell_deg)))
     off_arr = "array(" + ",".join(
-        f"named_struct('dr', {dr}L, 'dc', {dc}L)" for dr, dc in _OFFS) + ")"
+        f"named_struct('dr', {dr}L, 'dc', {dc}L)"
+        for dr, dc in _neighbour_offsets(ncols)) + ")"
     probes = (cells
               .select("cell_row", "cell_col",
                       F.explode(F.expr(off_arr)).alias("o"))
@@ -266,7 +272,7 @@ def gistar_numpy(cell_row, cell_col, x, cell_deg: float):
     skeys, sorted_x = keys[order], x[order]
     deg = np.zeros(len(x), np.int64)
     s = np.zeros(len(x), np.int64)
-    for dr, dc in _OFFS:
+    for dr, dc in _neighbour_offsets(ncols):
         probe = (row + dr) * span + (col + dc) % ncols - c0
         i = np.minimum(np.searchsorted(skeys, probe), len(skeys) - 1)
         hit = skeys[i] == probe

@@ -70,7 +70,7 @@ def _unwrap_ring(ring_lat, ring_lon) -> tuple[np.ndarray, np.ndarray]:
     the pole nearest its mean latitude, plus a zero-crossing cap edge
     along the pole itself. The result is an ordinary simple ring in
     unwrapped lon space, so every even-odd kernel downstream (numpy ray
-    casting, the JVM fold, interior-cell classification) handles
+    casting, interior-cell classification) handles
     Antarctica-class polygons with no special cases. Convention: a cap
     ring encloses the pole on its mean-latitude side (the standard
     GeoJSON-ambiguity resolution; pass an explicit hole ring for the
@@ -175,49 +175,10 @@ def classify_interior_cells(cells: np.ndarray, rings, level: int) -> np.ndarray:
     return inside & no_edge
 
 
-def _inside_expr(edges, plat, plon):
-    """Even-odd ray casting as a pure column expression: fold over the
-    polygon's flattened edge array (all rings concatenated — crossing parity
-    over the union of ring edges equals the even-odd result across rings).
-    Evaluated at lon and lon+360 and XORed, so antimeridian-unwrapped edges
-    (lon ∈ [0,360)) work in the same fold: for a normal point/edge pair the
-    shifted test never crosses, contributing nothing. Whole-stage codegen,
-    no Python."""
-    y = plat
-
-    def fold(x):
-        def step(acc, e):
-            yi, xi = e["a"]["lat"], e["a"]["lon"]
-            yj, xj = e["b"]["lat"], e["b"]["lon"]
-            crosses = (yi > y) != (yj > y)
-            # doubles: division by (yj-yi)=0 yields ±Inf, masked by `crosses`
-            x_at = xi + (y - yi) * (xj - xi) / (yj - yi)
-            return F.when(crosses & (x < x_at), ~acc).otherwise(acc)
-
-        return F.aggregate(edges, F.lit(False), step)
-
-    a = fold(plon)
-    b = fold(plon + F.lit(360.0))
-    return (a & ~b) | (~a & b)
-
-
-def _edge_rows(rings) -> list[dict]:
-    """Flattened edge structs {a:{lat,lon}, b:{lat,lon}} across all rings."""
-    out = []
-    for rla, rlo in rings:
-        n = len(rla)
-        for i in range(n):
-            j = (i + 1) % n
-            out.append({"a": {"lat": float(rla[i]), "lon": float(rlo[i])},
-                        "b": {"lat": float(rla[j]), "lon": float(rlo[j])}})
-    return out
-
-
 def point_in_polygon_join(spark: SparkSession, points: DataFrame,
                           polygons: pd.DataFrame, level: int = 8,
                           lat_col: str = "lat", lon_col: str = "lon",
                           point_id_col: str = "url",
-                          refine: str = "vector",
                           cell_col: str | None = None) -> DataFrame:
     """points(id, lat, lon) ⋈ polygons(admin_id, ring_lat[], ring_lon[]
     [, holes]) → (point_id, admin_id).
@@ -226,16 +187,11 @@ def point_in_polygon_join(spark: SparkSession, points: DataFrame,
     admin_id, ring_lat (list[float]), ring_lon (list[float]), and an
     optional `holes` column (list of (hole_lat_list, hole_lon_list)).
 
-    refine:
-      'vector' (default) — narrow-column pandas UDF (admin idx + lat/lon in,
-        bool out), numpy ray casting against broadcast rings. Fastest
-        measured: Arrow moves only 3 narrow columns and the kernel is
-        vectorized (Catalyst higher-order folds are interpreted per element,
-        2× slower at sf0.1).
-      'expr' — ray casting as a JVM fold over the flattened edge array;
-        zero Python, DuckDB-parity-friendly.
-      'pandas' — grouped-per-polygon numpy refine (cross-check only: its
-        parallelism is capped at the polygon count).
+    The refine is a narrow-column pandas UDF (admin idx + lat/lon in,
+    bool out): numpy ray casting against broadcast rings. Arrow moves only
+    3 narrow columns and the kernel is vectorized (a Catalyst higher-order
+    fold over the edge array, interpreted per element, measured 2× slower
+    at sf0.1).
 
     Candidates whose cell is provably interior to the polygon
     (classify_interior_cells) bypass the refine entirely — only
@@ -319,67 +275,35 @@ def point_in_polygon_join(spark: SparkSession, points: DataFrame,
     # scan + encode + join once per branch — measured 2× the whole query.
     cand = pts.join(cov_df, "cell", "inner")
 
-    if refine == "vector":
-        # 3c) narrow-column vectorized refine: rings indexed by int id live
-        # in the UDF closure; per-batch group-by-polygon numpy ray casting
-        admin_ids = sorted(rings.keys())
-        idx_of = {a: i for i, a in enumerate(admin_ids)}
-        ring_list = [rings[a] for a in admin_ids]
-        idx_df = F.broadcast(spark.createDataFrame(
-            [(a, idx_of[a]) for a in admin_ids], "admin_id string, __aidx int"))
+    # 3) narrow-column vectorized refine: rings indexed by int id live
+    # in the UDF closure; per-batch group-by-polygon numpy ray casting
+    admin_ids = sorted(rings.keys())
+    idx_of = {a: i for i, a in enumerate(admin_ids)}
+    ring_list = [rings[a] for a in admin_ids]
+    idx_df = F.broadcast(spark.createDataFrame(
+        [(a, idx_of[a]) for a in admin_ids], "admin_id string, __aidx int"))
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("boolean")
-        def inside(aidx: pd.Series, la: pd.Series, lo: pd.Series,
-                   interior: pd.Series) -> pd.Series:
-            # interior-cell candidates are provably contained — accepted
-            # without ray casting; only boundary-cell rows pay the kernel
-            out = interior.to_numpy(bool).copy()
-            todo = ~out
-            ai = aidx.to_numpy()
-            lav = la.to_numpy(np.float64)
-            lov = lo.to_numpy(np.float64)
-            for i in np.unique(ai[todo]):
-                m = todo & (ai == i)
-                out[m] = multi_ring_contains(ring_list[i], lav[m], lov[m])
-            return pd.Series(out)
+    @pandas_udf("boolean")
+    def inside(aidx: pd.Series, la: pd.Series, lo: pd.Series,
+               interior: pd.Series) -> pd.Series:
+        # interior-cell candidates are provably contained — accepted
+        # without ray casting; only boundary-cell rows pay the kernel
+        out = interior.to_numpy(bool).copy()
+        todo = ~out
+        ai = aidx.to_numpy()
+        lav = la.to_numpy(np.float64)
+        lov = lo.to_numpy(np.float64)
+        for i in np.unique(ai[todo]):
+            m = todo & (ai == i)
+            out[m] = multi_ring_contains(ring_list[i], lav[m], lov[m])
+        return pd.Series(out)
 
-        return (cand.join(idx_df, "admin_id")
-                .where(inside(F.col("__aidx"), F.col("lat"), F.col("lon"),
-                              F.col("interior")))
-                .select("point_id", "admin_id"))
-
-    if refine == "expr":
-        # 3a) flattened edge arrays ride the broadcast join; refine is an
-        # expression over all rings' edges at once
-        ring_rows = [(aid, _edge_rows(rr)) for aid, rr in rings.items()]
-        rings_df = F.broadcast(spark.createDataFrame(
-            ring_rows,
-            "admin_id string, edges array<struct<"
-            "a:struct<lat:double,lon:double>,b:struct<lat:double,lon:double>>>"))
-        return (cand.join(rings_df, "admin_id")
-                .where(F.col("interior")
-                       | _inside_expr(F.col("edges"), F.col("lat"),
-                                      F.col("lon")))
-                .select("point_id", "admin_id"))
-
-    # 3b) pandas refine (cross-check path)
-    rings_b = spark.sparkContext.broadcast(rings)
-
-    def refine_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        admin = pdf["admin_id"].iloc[0]
-        rr = rings_b.value[admin]
-        ok = pdf["interior"].to_numpy(bool).copy()
-        todo = ~ok
-        if todo.any():
-            ok[todo] = multi_ring_contains(
-                rr, pdf.loc[todo, "lat"].to_numpy(),
-                pdf.loc[todo, "lon"].to_numpy())
-        return pdf.loc[ok, ["point_id", "admin_id"]]
-
-    return cand.groupBy("admin_id").applyInPandas(
-        refine_fn, "point_id string, admin_id string")
+    return (cand.join(idx_df, "admin_id")
+            .where(inside(F.col("__aidx"), F.col("lat"), F.col("lon"),
+                          F.col("interior")))
+            .select("point_id", "admin_id"))
 
 
 def _refine_salt_map(pts: DataFrame, cov: DataFrame, target_rows: int,

@@ -165,7 +165,7 @@ def run_once(cores: int, n_pages: int, variant: str = "full",
         t_cells = time.perf_counter() - t0
         pip = point_in_polygon_join(spark, cells, _corpus_boxes(),
                                     level=7, point_id_col="url",
-                                    refine="vector", cell_col="cell_l7")
+                                    cell_col="cell_l7")
         rollup = cells.groupBy("tile_id").agg(
             F.count("*").alias("n_points"),
             F.approx_count_distinct("s2_cell").alias("n_cells"))

@@ -160,8 +160,7 @@ def _chaos_measure(spark, variant: str, pages: int,
         F.bit_xor(F.xxhash64("tile_id", "n_points", "n_cells")).alias("d"),
         F.count("*").alias("n")).collect()[0]
     pip = point_in_polygon_join(spark, cells, _corpus_boxes(), level=7,
-                                point_id_col="url", refine="vector",
-                                cell_col="cell_l7")
+                                point_id_col="url", cell_col="cell_l7")
     pipd = pip.agg(F.bit_xor(F.xxhash64("point_id", "admin_id")).alias("d"),
                    F.count("*").alias("n")).collect()[0]
     wall = time.perf_counter() - t0

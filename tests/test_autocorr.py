@@ -153,7 +153,8 @@ def _gistar_grids():
     """(cell_deg, [(row, col, x)]) cases for the numpy/SQL Gi*
     differential: seeded random grids with both wrap columns (0 and
     ncols-1) occupied side by side, a fully occupied 4-column grid, one
-    cell (n = 1: NULL) and a constant surface (S = 0: NULL)."""
+    cell (n = 1: NULL), a fully occupied 2x2 grid, a 1-column grid and a
+    constant surface (S = 0: NULL)."""
     rng = np.random.default_rng(11)
     cases = []
     for cell_deg, n_cells, rows in ((5.0, 150, 36), (360.0 / 256, 400, 30),
@@ -169,6 +170,11 @@ def _gistar_grids():
     cases.append((90.0, [(r, c, int(x)) for r in range(2) for c, x in
                          zip(range(4), rng.integers(1, 9, 4))]))
     cases.append((5.0, [(3, 7, 5)]))
+    # one and two columns: the wrapped offsets land on the same neighbour
+    cases.append((180.0, [(r, c, int(x)) for r in range(2) for c, x in
+                          zip(range(2), rng.integers(1, 9, 2))]))
+    cases.append((360.0, [(r, 0, int(x)) for r, x in
+                          enumerate(rng.integers(1, 9, 5))]))
     cases.append((10.0, [(r, c, 7) for r in range(4) for c in range(0, 36, 5)]))
     return cases
 
@@ -195,11 +201,17 @@ def test_gistar_numpy_bit_identical_to_sql(spark):
         for w in want:
             d, t, g = got[(w["cell_row"], w["cell_col"])]
             assert (d, t) == (w["deg"], w["s"])
+            assert w["gi_star"] is None or np.isfinite(w["gi_star"])
             if w["gi_star"] is None:
                 assert g is None
             else:
                 assert g is not None and np.float64(g).tobytes() == \
                     np.float64(w["gi_star"]).tobytes()
+    # a neighbour counts once where the column wrap repeats it
+    assert gistar_numpy([0, 0, 1, 1], [0, 1, 0, 1], [1, 2, 3, 4],
+                        180.0)[0].tolist() == [3, 3, 3, 3]
+    assert gistar_numpy([0, 1, 2], [0, 0, 0], [1, 2, 3],
+                        360.0)[0].tolist() == [1, 2, 1]
     # one cell and a constant surface are NULL, not only equal to SQL
     assert gistar_numpy([3], [7], [5], 5.0)[2].isna().all()
     assert gistar_numpy([0, 0, 1], [0, 35, 0], [7, 7, 7], 10.0)[2].isna().all()

@@ -397,3 +397,18 @@ def test_tiles_gi_star_null_is_null(spark, tmp_path):
     assert len(gi) == 1 and gi.null_count == 1
     assert Catalog(wd).load_table(spark, "tile_counts").first()["gi_star"] \
         is None
+
+
+def test_tiles_column_order_same_at_every_zoom(spark, tmp_path):
+    """tile_counts has one schema whichever Gi* path the zoom takes: zoom
+    8 runs the numpy kernel, zoom 10 (4^10 tiles) the distributed join."""
+    import json
+
+    cols = []
+    for zoom in (8, 10):
+        wd = str(tmp_path / f"z{zoom}")
+        run_pipeline(spark, wd, n_pages=100, zoom=zoom)
+        snap = Catalog(wd).latest_snapshot("tile_counts")
+        cols.append([f["name"] for f in json.loads(snap["schema"])["fields"]])
+    assert cols[0] == cols[1]
+    assert cols[0][0] == "tile_id" and cols[0][-1] == "gi_star"

@@ -135,6 +135,21 @@ def test_classify_sampling_prunes_columns(spark):
     assert rows(df) == rows(df.repartition(7))
 
 
+def test_temporal_resolution_is_one_jvm_aggregate(spark):
+    # one Exchange (collect_set's partial -> final aggregate), then array
+    # expressions per group row: no window, no join, no Python stage
+    out = em.q_temporal_resolution(spark, SF)
+    phys = _physical(out)
+    assert phys.count("Exchange") == 1, phys
+    assert "ObjectHashAggregate" in phys
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas",
+                 "Window", "Join"):
+        assert node not in phys, node
+    out.collect()
+    final = _physical(out).split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, final
+
+
 def test_date_scan_is_single_pass_codegen(spark):
     """The fused 46-format date scan: one text scan (every family regex in
     one projection), codegen explodes only — no interpreted HOF lambdas

@@ -8,7 +8,6 @@ from cartwright_spark.operators.resolution import (
     convert_to_timestamps,
     detect_latlon_resolution_np,
     detect_temporal_resolution_np,
-    temporal_resolution_distributed,
     temporal_resolution_grouped,
     spatial_resolution_grouped,
 )
@@ -133,15 +132,17 @@ def test_temporal_grouped_spark(spark):
 
 
 def test_temporal_distributed_matches_np(spark):
+    """No group column: the whole series is one group."""
     import pandas as pd
     secs = _series("hour", "UNIFORM", n=300)
     df = spark.createDataFrame(pd.DataFrame({"secs": secs}))
-    got = temporal_resolution_distributed(df, "secs")
+    [got] = temporal_resolution_grouped(df, "secs").collect()
     want = detect_temporal_resolution_np(secs)
-    assert got.unit == want.unit == "hour"
-    assert got.uniformity == want.uniformity
-    assert got.resolution == pytest.approx(want.resolution, rel=1e-9)
-    assert got.error == pytest.approx(want.error, rel=1e-9)
+    assert got["group"] == "_all"
+    assert got["unit"] == want.unit == "hour"
+    assert got["uniformity"] == want.uniformity
+    assert got["resolution"] == pytest.approx(want.resolution, rel=1e-9)
+    assert got["error"] == pytest.approx(want.error, rel=1e-9)
 
 
 def test_spatial_grouped_spark(spark):
@@ -156,37 +157,42 @@ def test_spatial_grouped_spark(spark):
 
 
 def test_temporal_grouped_sql_matches_pandas_form(spark):
-    """The pure-JVM grouped resolution equals the applyInPandas/numpy form
-    on every field (150-group fixture, mixed uniformity)."""
+    """The JVM aggregate equals the numpy kernel group by group: every unit
+    (millisecond included) at every uniformity, odd and even delta counts
+    (both median rules), duplicate timestamps and a NULL row. Groups the
+    kernel rejects (one value, duplicates only) are absent."""
     import pandas as pd
 
-    from cartwright_spark.operators.resolution import (
-        temporal_resolution_grouped_sql,
-    )
     rows = []
-    for g in range(24):
-        unit = UNITS[g % len(UNITS)]
-        uni = ["PERFECT", "UNIFORM", "NOT_UNIFORM"][g % 3]
-        for t in _series(unit, uni, n=80, seed=100 + g):
-            rows.append((f"g{g}", float(t)))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "secs"]))
-    a = {r["group"]: (r["uniformity"], r["unit"],
-                      round(r["resolution"], 9), round(r["error"], 9))
-         for r in temporal_resolution_grouped(df, "secs", "g").collect()}
-    b = {r["group"]: (r["uniformity"], r["unit"],
-                      round(r["resolution"], 9), round(r["error"], 9))
-         for r in temporal_resolution_grouped_sql(df, "secs", "g").collect()}
-    assert a == b and len(a) == 24
+    for g, unit in enumerate(TIME_UNITS):
+        for k, uni in enumerate(["PERFECT", "UNIFORM", "NOT_UNIFORM"]):
+            ts = _series(unit, uni, n=80 + k, seed=100 + 3 * g + k)
+            rows += [(f"{unit}-{uni}", float(t)) for t in ts]
+            rows.append((f"{unit}-{uni}", float(ts[5])))   # duplicate
+    rows += [("one", 5.0), ("dups", 7.0), ("dups", 7.0),
+             ("nul", 3.0), ("nul", None), ("nul", 9.0)]
+    pdf = pd.DataFrame(rows, columns=["g", "secs"])
+    df = spark.createDataFrame(pdf, "g string, secs double")
+    got = {r["group"]: (r["uniformity"], r["unit"],
+                        round(r["resolution"], 9), round(r["error"], 9))
+           for r in temporal_resolution_grouped(df, "secs", "g").collect()}
+    want = {}
+    for g, sub in pdf.groupby("g"):
+        res = detect_temporal_resolution_np(sub["secs"].dropna().to_numpy())
+        if res is not None:
+            want[g] = (res.uniformity, res.unit, round(res.resolution, 9),
+                       round(res.error, 9))
+    assert got == want
+    assert len(got) == 3 * len(TIME_UNITS) + 1
+    assert "one" not in got and "dups" not in got
+    assert {u for _, u, _, _ in got.values()} >= set(TIME_UNITS)
 
 
 def test_spatial_grouped_sql_matches_pandas_form(spark):
-    """The pure-JVM A9 grid detection equals the applyInPandas/numpy form
+    """The grouped A9 grid detection equals the numpy kernel per group
     across square, rectangular, and no-grid groups."""
     import pandas as pd
 
-    from cartwright_spark.operators.resolution import (
-        spatial_resolution_grouped_sql,
-    )
     rows = []
     for g, scale in (("sq_half", 0.5), ("sq_one", 1.0), ("sq_quarter", 0.25)):
         la, lo = _square_grid(scale, n=14)
@@ -202,20 +208,24 @@ def test_spatial_grouped_sql_matches_pandas_form(spark):
     rows += [("rand", float(a), float(b))
              for a, b in zip(rng.uniform(-80, 80, 200),
                              rng.uniform(-170, 170, 200))]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["g", "lat", "lon"]))
-    a = {(r["group"], r["kind"]): (r["uniformity"], r["unit"],
-                                   round(r["resolution"], 9),
-                                   round(r["error"], 9))
-         for r in spatial_resolution_grouped(df, "lat", "lon", "g").collect()}
-    b = {(r["group"], r["kind"]): (r["uniformity"], r["unit"],
-                                   round(r["resolution"], 9),
-                                   round(r["error"], 9))
-         for r in spatial_resolution_grouped_sql(df, "lat", "lon", "g").collect()}
-    assert a == b
-    assert ("sq_half", "square") in a and ("rect", "lat") in a \
-        and ("rect", "lon") in a
-    assert not any(g == "rand" for g, _ in a)
+    pdf = pd.DataFrame(rows, columns=["g", "lat", "lon"])
+    got = {(r["group"], r["kind"]): (r["uniformity"], r["unit"],
+                                     round(r["resolution"], 9),
+                                     round(r["error"], 9))
+           for r in spatial_resolution_grouped(
+               spark.createDataFrame(pdf), "lat", "lon", "g").collect()}
+    want = {}
+    for g, sub in pdf.groupby("g"):
+        res = detect_latlon_resolution_np(sub["lat"], sub["lon"])
+        for kind in ("square", "lat", "lon"):
+            r = getattr(res, kind) if res is not None else None
+            if r is not None:
+                want[(g, kind)] = (r.uniformity, r.unit,
+                                   round(r.resolution, 9), round(r.error, 9))
+    assert got == want
+    assert ("sq_half", "square") in got and ("rect", "lat") in got \
+        and ("rect", "lon") in got
+    assert not any(g == "rand" for g, _ in got)
 
 
 REFERENCE_GRIDS = [
@@ -234,15 +244,12 @@ _REF_DATA = "/root/reference/tests/test_data"
 @pytest.mark.parametrize("fname,scale", REFERENCE_GRIDS)
 def test_reference_grid_csvs(spark, fname, scale):
     """The reference's OWN golden grid CSVs (its 0.25° file is absent from
-    its repo): both the numpy kernel and the distributed SQL form detect
+    its repo): both the numpy kernel and the grouped Spark form detect
     the square degree grid at the expected scale. Column order follows the
     reference's test (it passes column 0 as lat — the files are lon,lat,
     which is symmetric for square global grids)."""
     import pandas as pd
 
-    from cartwright_spark.operators.resolution import (
-        spatial_resolution_grouped_sql,
-    )
     pdf = pd.read_csv(f"{_REF_DATA}/{fname}")
     lat, lon = pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()
     res = detect_latlon_resolution_np(lat, lon)
@@ -252,7 +259,7 @@ def test_reference_grid_csvs(spark, fname, scale):
 
     sdf = spark.createDataFrame(
         pd.DataFrame({"lat": lat, "lon": lon}))
-    rows = spatial_resolution_grouped_sql(sdf, "lat", "lon").collect()
+    rows = spatial_resolution_grouped(sdf, "lat", "lon").collect()
     assert len(rows) == 1 and rows[0]["kind"] == "square"
     assert rows[0]["unit"] == "degrees"
     assert abs(rows[0]["resolution"] - scale) < 1e-6

@@ -65,8 +65,7 @@ def test_covering_cells_superset():
     assert np.isin(pc, cells).all()
 
 
-@pytest.mark.parametrize("refine", ["expr", "pandas", "vector"])
-def test_pip_join_matches_bruteforce(spark, refine):
+def test_pip_join_matches_bruteforce(spark):
     rng = np.random.default_rng(21)
     pts = pd.DataFrame({
         "point_id": [f"p{i}" for i in range(2000)],
@@ -75,7 +74,7 @@ def test_pip_join_matches_bruteforce(spark, refine):
     })
     sdf = spark.createDataFrame(pts)
     got = point_in_polygon_join(spark, sdf, POLYGONS, level=8,
-                                point_id_col="point_id", refine=refine)
+                                point_id_col="point_id")
     got_set = {(r["point_id"], r["admin_id"]) for r in got.collect()}
     want = brute_force_pip(pts, POLYGONS)
     assert got_set == want
@@ -93,8 +92,7 @@ HIGH_LAT_POLYGONS = pd.DataFrame([
 ])
 
 
-@pytest.mark.parametrize("refine", ["expr", "pandas", "vector"])
-def test_pip_high_latitude_matches_bruteforce(spark, refine):
+def test_pip_high_latitude_matches_bruteforce(spark):
     """Dense probe grids at 55-85°N: the exact cell-bbox interior test must
     produce zero false accepts (the old center±edge model produced 8-978)."""
     las = np.linspace(50, 89, 140)
@@ -106,7 +104,7 @@ def test_pip_high_latitude_matches_bruteforce(spark, refine):
     })
     got = point_in_polygon_join(spark, spark.createDataFrame(pts),
                                 HIGH_LAT_POLYGONS, level=8,
-                                point_id_col="point_id", refine=refine)
+                                point_id_col="point_id")
     got_set = {(r["point_id"], r["admin_id"]) for r in got.collect()}
     want = brute_force_pip(pts, HIGH_LAT_POLYGONS)
     assert got_set == want
@@ -140,8 +138,7 @@ HOLED_POLYGONS = pd.DataFrame([
 ])
 
 
-@pytest.mark.parametrize("refine", ["expr", "pandas", "vector"])
-def test_pip_holes_even_odd(spark, refine):
+def test_pip_holes_even_odd(spark):
     rng = np.random.default_rng(11)
     pts = pd.DataFrame({
         "point_id": [f"h{i}" for i in range(3000)],
@@ -150,7 +147,7 @@ def test_pip_holes_even_odd(spark, refine):
     })
     got = point_in_polygon_join(spark, spark.createDataFrame(pts),
                                 HOLED_POLYGONS, level=8,
-                                point_id_col="point_id", refine=refine)
+                                point_id_col="point_id")
     got_set = {(r["point_id"], r["admin_id"]) for r in got.collect()}
     want = brute_force_pip(pts, HOLED_POLYGONS)
     assert got_set == want
@@ -172,8 +169,7 @@ FIJI_POLYGONS = pd.DataFrame([
 ])
 
 
-@pytest.mark.parametrize("refine", ["expr", "pandas", "vector"])
-def test_pip_antimeridian(spark, refine):
+def test_pip_antimeridian(spark):
     rng = np.random.default_rng(17)
     lon = np.where(rng.random(3000) < 0.5,
                    rng.uniform(170, 180, 3000),
@@ -185,7 +181,7 @@ def test_pip_antimeridian(spark, refine):
     })
     got = point_in_polygon_join(spark, spark.createDataFrame(pts),
                                 FIJI_POLYGONS, level=8,
-                                point_id_col="point_id", refine=refine)
+                                point_id_col="point_id")
     got_set = {(r["point_id"], r["admin_id"]) for r in got.collect()}
     want = brute_force_pip(pts, FIJI_POLYGONS)
     assert got_set == want
@@ -500,7 +496,7 @@ def test_pip_polar_cap_ring(spark):
     """Antarctica-class cap rings (round 3): a ring winding fully around
     the south pole is closed over the pole and handled by the ordinary
     even-odd kernels — hand-computed memberships through the containment
-    kernel and all three refine paths."""
+    kernel, the broadcast join and the bulk join."""
     import numpy as np
 
     from cartwright_spark.spatial.pip import (
@@ -532,12 +528,11 @@ def test_pip_polar_cap_ring(spark):
                            "ring_lon": lons}])
     want = {(f"p{i}", "cap") for i, p in enumerate(probes) if p[2]}
     sdf = spark.createDataFrame(pts)
-    for refine in ("vector", "expr"):
-        got_j = {(r["point_id"], r["admin_id"])
-                 for r in point_in_polygon_join(
-                     spark, sdf, polys, level=5, refine=refine,
-                     point_id_col="point_id").collect()}
-        assert got_j == want, refine
+    got_j = {(r["point_id"], r["admin_id"])
+             for r in point_in_polygon_join(
+                 spark, sdf, polys, level=5,
+                 point_id_col="point_id").collect()}
+    assert got_j == want
     got_b = {(r["point_id"], r["admin_id"])
              for r in point_in_polygon_join_bulk(
                  spark, sdf, spark.createDataFrame(polys[

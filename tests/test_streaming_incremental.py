@@ -35,18 +35,6 @@ def test_incremental_processing(spark, tmp_path):
     assert incremental_stage(spark, cat, "pages", "lens", _transform) is None
 
 
-def test_metrics_observe(spark):
-    from cartwright_spark.plans.metrics import StageMetrics
-    m = StageMetrics()
-    df = spark.range(1000)
-    with m.stage("count_stage"):
-        observed = m.observe(df.where(F.col("id") % 2 == 0), "count_stage")
-        observed.write.format("noop").mode("overwrite").save()
-    stats = m.as_dict()
-    assert stats["count_stage"]["rows_out"] == 500
-    assert stats["count_stage"]["wall_sec"] > 0
-
-
 def test_incremental_hll_sketch_equals_batch(spark, tmp_path):
     """Sketch mergeability × incremental micro-batches: each increment
     commits only ITS batch's HLL register table; max-merging the
